@@ -34,27 +34,10 @@ object Bench {
     val master = Sessions.master
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Per-stage shuffle volume, attributed per query by draining the
-    // listener bus at each measurement boundary — the hard evidence for
+    // Per-stage shuffle volume, attributed per query by closing a stage
+    // window at each measurement boundary — the hard evidence for
     // exchange-volume claims that plan shapes alone cannot give.
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null) {
-            shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            ()
-          }
-        }
-      })
-    def shuffleNow(): (Long, Long) = {
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-      (shuffleRead.get(), shuffleWrite.get())
-    }
+    val stages = org.apache.spark.StageLog.attach(spark.sparkContext)
     System.err.println(
       s"[bench] heap=${Runtime.getRuntime.maxMemory() / (1 << 20)}MiB " +
         s"cpus=$cpus runs=$runs")
@@ -110,13 +93,10 @@ object Bench {
     // GC-debt-absorbing query warm-up between the probe and the clock.
     def calibProbe(): Double = try {
       (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0, 50000000L, 1, cpus.toInt)
+        Sessions.noopSeconds(spark.range(0, 50000000L, 1, cpus.toInt)
           .selectExpr("xxhash64(id) AS h")
           .repartition(cpus.toInt)
-          .selectExpr("bit_xor(h) AS s") // overflow-free under ANSI
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+          .selectExpr("bit_xor(h) AS s")) // overflow-free under ANSI
       }.min
     } catch {
       case e: Throwable =>
@@ -168,11 +148,12 @@ object Bench {
     // the first aux query under a BENCH_ONLY subset with no headline
     // selection — an empty-headline run previously got no query warm-up
     // at all and its first aux sample ate it).
-    try {
-      (headline ++ aux).headOption.foreach(
-        _.timed(spark, sfDir).write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
-    } catch { case _: Throwable => () }
+    def warmUp(): Unit =
+      try (headline ++ aux).headOption.foreach(q =>
+        Sessions.noopSeconds(q.timed(spark, sfDir)))
+      catch { case _: Throwable => () }
+      finally spark.catalog.clearCache()
+    warmUp()
 
     var failed = List.empty[String]
     /** Cumulative (busyJiffies, stealJiffies) from /proc/stat — the VM
@@ -209,22 +190,19 @@ object Bench {
       System.err.println(s"[bench] timing ${q.name}")
       val samples = (1 to runs).map { _ =>
         val g0 = gcNow()
-        val s0 = shuffleNow()
-        val t0 = System.nanoTime()
+        stages.take() // opens this run's stage window
         try {
-          q.timed(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val dt = Sessions.noopSeconds(q.timed(spark, sfDir))
           val gc = gcNow() - g0
-          val s1 = shuffleNow()
-          spark.catalog.clearCache()
-          (dt, gc, s1._1 - s0._1, s1._2 - s0._2)
+          val run = stages.take()
+          (dt, gc, run.map(_.shuffleReadBytes).sum,
+            run.map(_.shuffleWriteBytes).sum)
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] ${q.name} FAILED: $e")
             failed ::= q.name
-            spark.catalog.clearCache()
             (-1.0, 0L, 0L, 0L)
-        }
+        } finally spark.catalog.clearCache()
       }
       if (samples.exists(_._1 < 0)) (-1.0, -1.0, 0L, 0L, 0L, 0L)
       else {
@@ -303,11 +281,7 @@ object Bench {
         // the probe's three 50M-row allocation bursts must not land on
         // the retried pass's FIRST timed sample — absorb the GC debt in
         // the same untimed query warm-up the cold start uses.
-        try {
-          (headline ++ aux).headOption.foreach(
-            _.timed(spark, sfDir).write.format("noop").mode("overwrite").save())
-          spark.catalog.clearCache()
-        } catch { case _: Throwable => () }
+        warmUp()
       } else done = true
     }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Production-geometry PQ recall sweep — the measurement behind
   * SCALING.md's K/SQ_CAND trade table (round-14 verdict item 3).
@@ -23,45 +23,12 @@ import org.apache.spark.sql.SparkSession
 object PqGeometry {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val geoms: Seq[(Int, Int)] =
-      (if (args.length > 1) args(1) else "16:40,64:40,64:80,64:160")
-        .split(',').toSeq.map { g =>
-          // clear diagnostics beat a MatchError in a measurement main
-          // (round-15 ADVICE)
-          val parts = g.split(':')
-          require(parts.length == 2 && parts.forall(_.trim.matches("\\d+")),
-            s"geometry token '$g' is not k:cand (e.g. 64:160)")
-          (parts(0).trim.toInt, parts(1).trim.toInt)
-        }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val out = geoms.map { case (k, cand) =>
-      // train untimed (the codebook is a build-time artifact — the
-      // warmPq contract), then time the serve+eval end-to-end
-      graft.ops.Ann.pqRecallGeom(spark, dir, k, cand).count()
-      val t0 = System.nanoTime()
-      val rows = graft.ops.Ann.pqRecallGeom(spark, dir, k, cand)
-        .collect()
-      val secs = (System.nanoTime() - t0) / 1e9
-      // empty-guard: a recall frame with zero query rows must read as a
-      // loud failure, not a NaN smuggled into the JSON record
-      require(rows.nonEmpty,
-        s"pqRecallGeom(k=$k,cand=$cand) returned zero query rows")
-      val mean = rows.map(_.getAs[Double]("recall")).sum / rows.length
-      spark.catalog.clearCache()
-      graft.Caches.releasePrefix("ann.")
-      val line = f"""{"k":$k,"cand":$cand,"mean_recall_at_10":$mean%.4f,"eval_s":$secs%.1f}"""
-      println(line)
-      line
+    val lines = GeometrySweep.run(
+      args.lift(1).getOrElse("16:40,64:40,64:80,64:160"), "k:cand",
+      (k, cand) => s""""k":$k,"cand":$cand""") { (spark, k, cand) =>
+      graft.ops.Ann.pqRecallGeom(spark, dir, k, cand)
     }
-    println(s"""{"sweep":[${out.mkString(",")}],"dir":"$dir"}""")
-    spark.stop()
+    println(s"""{"sweep":[${lines.mkString(",")}],"dir":"$dir"}""")
   }
 }
 
@@ -82,39 +49,54 @@ object PqGeometry {
 object IvfGeometry {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val geoms: Seq[(Int, Int)] =
-      (if (args.length > 1) args(1) else "1:40,2:40,4:40,8:40,16:40,4:160,8:160")
-        .split(',').toSeq.map { g =>
-          val parts = g.split(':')
-          require(parts.length == 2 && parts.forall(_.trim.matches("\\d+")),
-            s"geometry token '$g' is not nprobe:cand (e.g. 8:160)")
-          (parts(0).trim.toInt, parts(1).trim.toInt)
-        }
     val k = if (args.length > 2) args(2).trim.toInt else graft.ops.Ann.PQ_K
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val lines = GeometrySweep.run(
+      args.lift(1).getOrElse("1:40,2:40,4:40,8:40,16:40,4:160,8:160"),
+      "nprobe:cand", (np, cand) => s""""nprobe":$np,"cand":$cand,"k":$k""") {
+      (spark, np, cand) =>
+        graft.ops.Ann.ivfPqRecallGeom(spark, dir, np, cand, k)
+    }
+    println(s"""{"ivf_sweep":[${lines.mkString(",")}],"k":$k,"dir":"$dir"}""")
+  }
+}
+
+/** The sweep body [[PqGeometry]] and [[IvfGeometry]] share. Every `a:b`
+  * token of `spec` (named by `shape`) is parsed before the session
+  * starts. Per geometry the recall frame is built and counted once
+  * untimed (the codebook is a build-time artifact — the warmPq
+  * contract), then built again and collected under the clock. Prints
+  * and returns one JSON line per geometry: `fields(a, b)`, the mean
+  * recall@10 and the timed serve+eval wall. */
+private object GeometrySweep {
+  def run(spec: String, shape: String, fields: (Int, Int) => String)(
+      recall: (SparkSession, Int, Int) => DataFrame): Seq[String] = {
+    val geoms = spec.split(',').toSeq.map { g =>
+      // clear diagnostics beat a MatchError in a measurement main
+      // (round-15 ADVICE)
+      val parts = g.split(':')
+      require(parts.length == 2 && parts.forall(_.trim.matches("\\d+")),
+        s"geometry token '$g' is not $shape (e.g. 64:160)")
+      (parts(0).trim.toInt, parts(1).trim.toInt)
+    }
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val out = geoms.map { case (np, cand) =>
-      graft.ops.Ann.ivfPqRecallGeom(spark, dir, np, cand, k).count()
+    val lines = geoms.map { case (a, b) =>
+      recall(spark, a, b).count()
       val t0 = System.nanoTime()
-      val rows = graft.ops.Ann.ivfPqRecallGeom(spark, dir, np, cand, k)
-        .collect()
+      val rows = recall(spark, a, b).collect()
       val secs = (System.nanoTime() - t0) / 1e9
-      require(rows.nonEmpty,
-        s"ivfPqRecallGeom(nprobe=$np,cand=$cand,k=$k) returned zero query rows")
+      // empty-guard: a recall frame with zero query rows must read as a
+      // loud failure, not a NaN smuggled into the JSON record
+      require(rows.nonEmpty, s"$shape = $a:$b returned zero query rows")
       val mean = rows.map(_.getAs[Double]("recall")).sum / rows.length
       spark.catalog.clearCache()
       graft.Caches.releasePrefix("ann.")
-      val line = f"""{"nprobe":$np,"cand":$cand,"k":$k,"mean_recall_at_10":$mean%.4f,"eval_s":$secs%.1f}"""
+      val line = s"{${fields(a, b)}," +
+        f""""mean_recall_at_10":$mean%.4f,"eval_s":$secs%.1f}"""
       println(line)
       line
     }
-    println(s"""{"ivf_sweep":[${out.mkString(",")}],"k":$k,"dir":"$dir"}""")
     spark.stop()
+    lines
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scale-driver measurement for the SCALING.md curvature analysis
   * (round-9): for each dir, print the near-dup operators' documented COST
@@ -18,13 +17,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleDrivers {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleDrivers <dir> [dir...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { dir =>
       val c = ops.Ann.candidateStats(spark, dir).head()

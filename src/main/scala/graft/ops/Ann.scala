@@ -2132,20 +2132,10 @@ object Ann {
   def pqRecall(spark: SparkSession, dir: String): DataFrame =
     recallAgainstBrute(spark, dir, pqTopK(spark, dir))
 
-  /** [[pqRecall]] with the round-13 seeded codebook — the baseline the
-    * trained recall is measured against (SCALING.md); not registered. */
-  private[graft] def pqRecallSeeded(spark: SparkSession,
-      dir: String): DataFrame =
-    recallAgainstBrute(spark, dir, pqTopK(spark, dir, trained = false))
-
   /** q164: recall@k of the q158 IVF+PQ composed serve (coarse pruning ×
     * ADC screen — the two approximation legs evaluated together). */
   def ivfPqRecall(spark: SparkSession, dir: String): DataFrame =
     recallAgainstBrute(spark, dir, ivfPqTopK(spark, dir))
-
-  private[graft] def ivfPqRecallSeeded(spark: SparkSession,
-      dir: String): DataFrame =
-    recallAgainstBrute(spark, dir, ivfPqTopK(spark, dir, trained = false))
 
   private def quantRecallOracle(approxSql: String): String =
     s"""WITH bf AS ($bruteForceOracle),
